@@ -168,6 +168,12 @@ def _cmd_validate_manifest(spark: SparkSession, args) -> int:
     return 0 if n_bad == 0 else 1
 
 
+_MAX_FILES_HELP = (
+    "cap each micro-batch at this many files (default: one scan wave of "
+    "bytes, defaultParallelism x spark.sql.files.maxPartitionBytes)"
+)
+
+
 def _cmd_monitor_stream(spark: SparkSession, args) -> int:
     from .streaming.monitor import stream_time_rollup
 
@@ -434,7 +440,7 @@ def build_parser() -> argparse.ArgumentParser:
     ms.add_argument("--stat-dir", required=True)
     ms.add_argument("--checkpoint-dir", required=True)
     ms.add_argument("--minutes", type=int, default=1)
-    ms.add_argument("--max-files-per-trigger", type=int, default=10)
+    ms.add_argument("--max-files-per-trigger", type=int, help=_MAX_FILES_HELP)
 
     dr = add(
         "drift",
@@ -445,7 +451,7 @@ def build_parser() -> argparse.ArgumentParser:
     dr.add_argument("--docs-dir", required=True)
     dr.add_argument("--state-dir", required=True)
     dr.add_argument("--checkpoint-dir", required=True)
-    dr.add_argument("--max-files-per-trigger", type=int, default=10)
+    dr.add_argument("--max-files-per-trigger", type=int, help=_MAX_FILES_HELP)
 
     pg = add(
         "ppl-gate",
@@ -457,7 +463,7 @@ def build_parser() -> argparse.ArgumentParser:
     pg.add_argument("--docs-dir", required=True)
     pg.add_argument("--state-dir", required=True)
     pg.add_argument("--checkpoint-dir", required=True)
-    pg.add_argument("--max-files-per-trigger", type=int, default=10)
+    pg.add_argument("--max-files-per-trigger", type=int, help=_MAX_FILES_HELP)
     pg.add_argument("--limit", type=int, default=50)
     pg.add_argument(
         "--report-only",
@@ -476,7 +482,7 @@ def build_parser() -> argparse.ArgumentParser:
     dg.add_argument("--docs-dir", required=True)
     dg.add_argument("--state-dir", required=True)
     dg.add_argument("--checkpoint-dir", required=True)
-    dg.add_argument("--max-files-per-trigger", type=int, default=10)
+    dg.add_argument("--max-files-per-trigger", type=int, help=_MAX_FILES_HELP)
     dg.add_argument("--limit", type=int, default=50)
     dg.add_argument(
         "--report-only",

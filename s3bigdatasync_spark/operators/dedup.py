@@ -895,6 +895,34 @@ WHERE {_cos_sql('ea.embedding', 'eb.embedding')} >= {COSINE_THRESHOLD}
 """
 
 
+_OBS_TIMEOUT_S = 120.0
+
+
+def checkpoint_metrics(obs, what: str):
+    """The metrics row of Observation `obs` once the eager localCheckpoint
+    it observed has returned. obs.get blocks until the Observation listener
+    fires, which CLASSIC Spark guarantees for an eager checkpoint
+    (Dataset.withAction wraps the checkpoint job). On a runtime that does
+    not fire Observation listeners for checkpoint actions an unbounded
+    obs.get would hang silently, so this polls the Java-side row with a
+    deadline and fails loudly instead; a runtime whose Observation has no
+    Java-side row to poll (Spark Connect) fails the same way at once. The
+    metric lands within milliseconds of the checkpoint returning, so the
+    poll normally ends on its first check."""
+    jo = getattr(obs, "_jo", None)
+    deadline = time.monotonic() + _OBS_TIMEOUT_S
+    while jo is None or not jo.getRowOrEmpty().isDefined():
+        if jo is None or time.monotonic() >= deadline:
+            raise RuntimeError(
+                f"{what}: checkpoint completed but its Observation "
+                "metrics never arrived — this runtime does not report "
+                "observed metrics for localCheckpoint actions "
+                "(classic-Spark assumption violated)"
+            )
+        time.sleep(0.01)
+    return obs.get
+
+
 def _cc_labels(edges: DataFrame, what: str) -> DataFrame:
     """Min-label propagation fixpoint over a SYMMETRIC, eagerly-checkpointed
     edge relation → (doc_id, lbl) for every non-isolated node — the shared
@@ -941,25 +969,8 @@ def _cc_labels(edges: DataFrame, what: str) -> DataFrame:
             .select("doc_id", "lbl")
         )
         # sum over an empty relation observes NULL — an empty graph is
-        # converged. obs.get blocks until the Observation listener fires;
-        # the eager localCheckpoint above guarantees that on CLASSIC Spark
-        # (Dataset.withAction wraps the checkpoint job). On a runtime that
-        # doesn't fire Observation listeners for checkpoint actions (e.g.
-        # Spark Connect) an unbounded obs.get would hang silently, so poll
-        # the Java-side row with a deadline and fail loudly instead
-        # (ADVICE r11). The metric lands within milliseconds of the eager
-        # checkpoint returning, so the loop exits on its first iteration in
-        # practice.
-        deadline = time.monotonic() + 120.0
-        while obs._jo is not None and not obs._jo.getRowOrEmpty().isDefined():
-            if time.monotonic() >= deadline:
-                raise RuntimeError(
-                    f"{what}: checkpoint completed but its Observation "
-                    "metrics never arrived — this runtime does not report "
-                    "observed metrics for localCheckpoint actions "
-                    "(classic-Spark assumption violated)"
-                )
-        if not obs.get["n_chg"]:
+        # converged.
+        if not checkpoint_metrics(obs, what)["n_chg"]:
             return labels
     # a silent fall-through here would return wrong cluster labels with no
     # signal at production scale where no oracle runs

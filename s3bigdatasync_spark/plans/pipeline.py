@@ -21,8 +21,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.stats import SIZE_BUCKETS
+from ..streaming.monitor import as_copy_log, read_copy_log
 
 TASK_BATCH_SIZE = 100  # objects per task file ≙ message_body_max_num (ListProducer.py:17)
+
+ROLLUP_MINUTES = (1, 5, 60)  # the stat table's time_unit partitions
+
+# The stat table monitor_stats writes, read under a fixed schema: no
+# schema-inference job per read, and a stat dir with no parquet file yet
+# reads as an empty table.
+STAT_SCHEMA = (
+    "start_time long, success_object_size long, success_object_num long, "
+    "failed_object_size long, failed_object_num long, time_unit int"
+)
 
 
 def compute_stats(inv: DataFrame) -> DataFrame:
@@ -108,7 +119,7 @@ def task_executor(
     # Reference logs BOTH statuses to the monitor table (item_log with
     # ReplicationStatus 0/1, TaskExecutor.py:66-80) and additionally routes
     # the failed action to the dead-letter queue for retry (79-85).
-    results.write.mode("append").parquet(copy_log_dir)
+    as_copy_log(results).write.mode("append").parquet(copy_log_dir)
     failed = results.filter(F.col("replication_status") == 0)
     n_failed = failed.count()
     if n_failed:
@@ -121,34 +132,42 @@ def task_executor(
 def monitor_stats(spark: SparkSession, copy_log_dir: str, stat_dir: str) -> None:
     """§3.3 batch leg: 1/5/60-minute rollup of copy_log → stat table
     partitioned by time_unit (the D4 shape; streaming variant in
-    streaming.monitor)."""
-    log = spark.read.parquet(copy_log_dir)
-    parts = []
-    for minutes in (1, 5, 60):
-        secs = minutes * 60
-        start = (F.col("replication_time").cast("long") / secs).cast("long") * secs
-        parts.append(
-            log.withColumn("start_time", start)
-            .groupBy("start_time")
-            .agg(
-                F.sum(F.when(F.col("replication_status") == 1, F.col("size")).otherwise(0)).alias("success_object_size"),
-                F.sum(F.when(F.col("replication_status") == 1, 1).otherwise(0)).alias("success_object_num"),
-                F.sum(F.when(F.col("replication_status") == 0, F.col("size")).otherwise(0)).alias("failed_object_size"),
-                F.sum(F.when(F.col("replication_status") == 0, 1).otherwise(0)).alias("failed_object_num"),
-            )
-            .withColumn("time_unit", F.lit(minutes))
+    streaming.monitor). One scan of the log: each row is fanned out to its
+    three time units before a single keyed aggregation."""
+    unit = F.explode(F.array(*[F.lit(m) for m in ROLLUP_MINUTES])).alias("time_unit")
+    secs = F.col("time_unit") * 60
+    start = (F.col("replication_time").cast("long") / secs).cast("long") * secs
+    ok = F.col("replication_status") == 1
+    bad = F.col("replication_status") == 0
+    (
+        read_copy_log(spark, copy_log_dir)
+        .select("replication_time", "replication_status", "size", unit)
+        .groupBy("time_unit", start.alias("start_time"))
+        .agg(
+            F.sum(F.when(ok, F.col("size")).otherwise(0)).alias("success_object_size"),
+            F.sum(F.when(ok, 1).otherwise(0)).alias("success_object_num"),
+            F.sum(F.when(bad, F.col("size")).otherwise(0)).alias("failed_object_size"),
+            F.sum(F.when(bad, 1).otherwise(0)).alias("failed_object_num"),
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out.write.mode("overwrite").partitionBy("time_unit").parquet(stat_dir)
+        .write.mode("overwrite")
+        .partitionBy("time_unit")
+        .parquet(stat_dir)
+    )
+
+
+def _minute_stats(spark: SparkSession, stat_dir: str) -> DataFrame:
+    """The time_unit=1 partition of the stat table."""
+    return (
+        spark.read.schema(STAT_SCHEMA)
+        .parquet(stat_dir)
+        .filter(F.col("time_unit") == 1)
+    )
 
 
 def dashboard_progress(spark: SparkSession, stat_dir: str) -> DataFrame:
     """§3.3 serving leg: global progress rollup (D7/D8) off the stat table —
     partition-pruned to time_unit=1."""
-    stat = spark.read.parquet(stat_dir).filter(F.col("time_unit") == 1)
-    return stat.agg(
+    return _minute_stats(spark, stat_dir).agg(
         F.sum("success_object_size").alias("success_size"),
         F.sum("success_object_num").alias("success_num"),
         F.sum("failed_object_size").alias("failed_size"),
@@ -157,7 +176,10 @@ def dashboard_progress(spark: SparkSession, stat_dir: str) -> DataFrame:
 
 
 def dashboard_graph(
-    spark: SparkSession, stat_dir: str, window_minutes: int = 60
+    spark: SparkSession,
+    stat_dir: str,
+    window_minutes: int = 60,
+    hi: int | None = None,
 ) -> DataFrame:
     """§3.3 serving leg, graph half: the zero-filled per-minute series
     UICenter's `/tasksGraph` route renders (`ddbModel.returnTasksGraphData`
@@ -169,9 +191,12 @@ def dashboard_graph(
     time_spine_zero_fill pattern (J2) over the stat table. The spine is
     `window_minutes` rows driver-built from one 1-row bounds agg; the stat
     side is partition-pruned (time_unit=1) plus a pushed start_time range
-    filter — at any scale this reads one hour of one partition."""
-    stat = spark.read.parquet(stat_dir).filter(F.col("time_unit") == 1)
-    hi = stat.agg(F.max("start_time").alias("hi")).collect()[0]["hi"]
+    filter — at any scale this reads one hour of one partition. A caller
+    that already holds the newest minute passes it as `hi`, which skips the
+    bounds agg."""
+    stat = _minute_stats(spark, stat_dir)
+    if hi is None:
+        hi = stat.agg(F.max("start_time").alias("hi")).collect()[0]["hi"]
     empty_schema = (
         "start_time long, success_object_num long, failed_object_num long, "
         "success_object_size long, failed_object_size long"
@@ -230,9 +255,10 @@ def dashboard_report(
           route's parallel arrays.
 
     Driver-side state is the report itself: one 1-row agg collect + one
-    `window_minutes`-row collect."""
-    stat = spark.read.parquet(stat_dir).filter(F.col("time_unit") == 1)
-    row = stat.agg(
+    `window_minutes`-row collect. The agg's t_hi anchors the graph, so the
+    stat table is read once per half and never for its bounds again. A stat
+    dir with no parquet file yet renders the zero report."""
+    row = _minute_stats(spark, stat_dir).agg(
         F.sum("success_object_size").alias("success_size"),
         F.sum("success_object_num").alias("success_num"),
         F.sum("failed_object_size").alias("failed_size"),
@@ -269,7 +295,13 @@ def dashboard_report(
         progress["eta_seconds"] = (
             round(remaining / speed * 60, 3) if speed > 0 else None
         )
-    g = dashboard_graph(spark, stat_dir, window_minutes=window_minutes).collect()
+    g = (
+        dashboard_graph(
+            spark, stat_dir, window_minutes=window_minutes, hi=progress["end_time"]
+        ).collect()
+        if progress["end_time"] is not None
+        else []
+    )
     graph = {
         "start_times": [int(r["start_time"]) for r in g],
         "success_objects": [int(r["success_object_num"]) for r in g],

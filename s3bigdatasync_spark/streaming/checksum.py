@@ -31,6 +31,7 @@ from pyspark.sql.utils import AnalysisException
 
 from ..operators.stats import CHECKSUM_MOD, checksum_chunk, checksum_sum
 from .localrel import local_rel
+from .source import file_stream
 
 INVENTORY_STREAM_SCHEMA = StructType(
     [
@@ -65,15 +66,13 @@ def stream_table_checksum(
     inventory_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 10,
+    max_files_per_trigger: int | None = None,
 ):
     """Maintain the running fingerprint over an append-only inventory dir.
     Returns the StreamingQuery (availableNow trigger: drains the backlog,
     then stops — re-run on the same checkpoint to pick up new files)."""
-    stream = (
-        spark.readStream.schema(INVENTORY_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(inventory_dir)
+    stream = file_stream(
+        spark, "parquet", inventory_dir, INVENTORY_STREAM_SCHEMA, max_files_per_trigger
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:

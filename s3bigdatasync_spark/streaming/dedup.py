@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .queue import TASK_SCHEMA, msg_id
+from .source import file_stream
 
 WATERMARK = "30 minutes"
 EVENT_TIME_COL = "enqueued_at"
@@ -37,11 +38,7 @@ def stream_dedup_tasks(
     schema = StructType(
         TASK_SCHEMA.fields + [StructField(EVENT_TIME_COL, TimestampType())]
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(queue_dir)
-    )
+    stream = file_stream(spark, "json", queue_dir, schema, max_files_per_trigger)
     deduped = (
         msg_id(stream)
         .withWatermark(EVENT_TIME_COL, WATERMARK)

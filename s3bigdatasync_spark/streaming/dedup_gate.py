@@ -65,6 +65,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..operators.dedup import _norm_text
 from .segments import read_segmented_counts, segmented_count_sink
+from .source import file_stream
 
 DOCS_STREAM_SCHEMA = StructType(
     [
@@ -122,17 +123,15 @@ def stream_dedup_state(
     docs_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 10,
+    max_files_per_trigger: int | None = None,
     **sink_opts,
 ):
     """Maintain the content-hash index over an append-only document dir.
     Returns the StreamingQuery (availableNow trigger: drains the backlog,
     then stops — re-run on the same checkpoint for new files). sink_opts
     forward to segmented_count_sink (merge_fanout, bucket_min_rows)."""
-    stream = (
-        spark.readStream.schema(DOCS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
+    stream = file_stream(
+        spark, "parquet", docs_dir, DOCS_STREAM_SCHEMA, max_files_per_trigger
     )
     sink = segmented_count_sink(
         state_dir,

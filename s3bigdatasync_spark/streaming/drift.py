@@ -48,6 +48,7 @@ from pyspark.sql.utils import AnalysisException
 
 from ..operators.curation import kl_report_from_counts, source_token_counts
 from .localrel import local_rel
+from .source import file_stream
 
 DOCS_STREAM_SCHEMA = StructType(
     [
@@ -181,15 +182,13 @@ def stream_source_drift(
     docs_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 10,
+    max_files_per_trigger: int | None = None,
 ):
     """Maintain the running unigram-count state over an append-only document
     dir. Returns the StreamingQuery (availableNow trigger: drains the
     backlog, then stops — re-run on the same checkpoint for new files)."""
-    stream = (
-        spark.readStream.schema(DOCS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
+    stream = file_stream(
+        spark, "parquet", docs_dir, DOCS_STREAM_SCHEMA, max_files_per_trigger
     )
     sink = versioned_count_sink(
         state_dir, _COUNTS_SCHEMA, ["source", "token"], source_token_counts

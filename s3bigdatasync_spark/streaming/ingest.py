@@ -36,6 +36,7 @@ from pyspark.sql.utils import AnalysisException
 
 from ..operators.dedup import _norm_text
 from ..operators.text import pred_lang_col, quality_cols
+from .source import file_stream
 
 DOC_STREAM_SCHEMA = StructType(
     [
@@ -85,10 +86,8 @@ def stream_corpus_ingest(
     """Drain incoming JSONL document drops through the admission gates.
     availableNow trigger: processes the backlog then stops — re-run on the
     same checkpoint to pick up later drops."""
-    stream = (
-        spark.readStream.schema(DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(incoming_dir)
+    stream = file_stream(
+        spark, "json", incoming_dir, DOC_STREAM_SCHEMA, max_files_per_trigger
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -180,10 +179,8 @@ def stream_neardup_ingest(
     admitted corpus is never rescanned."""
     from ..operators.dedup import _banded, signatures_for
 
-    stream = (
-        spark.readStream.schema(DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(incoming_dir)
+    stream = file_stream(
+        spark, "json", incoming_dir, DOC_STREAM_SCHEMA, max_files_per_trigger
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:

@@ -11,8 +11,9 @@ Spark-native fix is exactly the built-in machinery:
   (rows later than WATERMARK_DELAY are dropped, never silently clobbered);
 * checkpointing replaces the hand-rolled HWM (restart-safe, exactly-once
   into an idempotent sink);
-* maxFilesPerTrigger is the backpressure knob (≙ the reference's queue
-  high-watermark 1000, AzureEtagCheck/mpmgr.py:139-145).
+* the per-trigger admission limit is the backpressure knob (≙ the
+  reference's queue high-watermark 1000, AzureEtagCheck/mpmgr.py:139-145):
+  one scan wave of bytes by default, or a file count (streaming/source.py).
 """
 
 from __future__ import annotations
@@ -20,7 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -28,14 +28,32 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .source import file_stream
+
+# The one copy_log schema: both writers (plans.pipeline.task_executor and
+# streaming.queue.consume_task_queue) project onto it and every reader reads
+# under it, so no read pays a schema-inference job. replication_status is
+# long because an int-typed file (the consumer's spelling before the schemas
+# were unified) widens to long on read, while a long-typed file cannot be
+# read as int.
 COPY_LOG_SCHEMA = StructType(
     [
         StructField("object_key", StringType()),
         StructField("replication_time", TimestampType()),
-        StructField("replication_status", IntegerType()),
+        StructField("replication_status", LongType()),
         StructField("size", LongType()),
     ]
 )
+
+
+def as_copy_log(df: DataFrame) -> DataFrame:
+    """`df`'s copy-log columns, cast and ordered as COPY_LOG_SCHEMA."""
+    return df.select(*[F.col(f.name).cast(f.dataType) for f in COPY_LOG_SCHEMA])
+
+
+def read_copy_log(spark: SparkSession, copy_log_dir: str) -> DataFrame:
+    return spark.read.schema(COPY_LOG_SCHEMA).parquet(copy_log_dir)
+
 
 WATERMARK_DELAY = "10 minutes"
 
@@ -64,7 +82,7 @@ def stream_time_rollup(
     out_dir: str,
     checkpoint_dir: str,
     minutes: int = 1,
-    max_files_per_trigger: int = 10,
+    max_files_per_trigger: int | None = None,
 ):
     """Start the streaming stat job; returns the StreamingQuery.
 
@@ -72,10 +90,8 @@ def stream_time_rollup(
     table partitioned by time_unit — append of finalized windows (watermark
     guarantees no window is emitted twice in update=False append mode).
     """
-    stream = (
-        spark.readStream.schema(COPY_LOG_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(copy_log_dir)
+    stream = file_stream(
+        spark, "parquet", copy_log_dir, COPY_LOG_SCHEMA, max_files_per_trigger
     )
     stat = _windowed_stat(stream, minutes)
 
@@ -107,7 +123,7 @@ def read_stats(spark: SparkSession, out_dir: str) -> DataFrame:
 def batch_equivalent(spark: SparkSession, copy_log_dir: str, minutes: int = 1) -> DataFrame:
     """The batch query the stream must converge to (parity oracle for tests:
     run the stream over incremental appends, compare to this)."""
-    log = spark.read.schema(COPY_LOG_SCHEMA).parquet(copy_log_dir)
+    log = read_copy_log(spark, copy_log_dir)
     return (
         log.groupBy(
             F.window("replication_time", f"{minutes} minutes").alias("w"),

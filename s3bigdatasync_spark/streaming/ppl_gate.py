@@ -44,6 +44,7 @@ from ..operators.curation import (
     lang_token_counts,
 )
 from .drift import read_versioned_counts, versioned_count_sink
+from .source import file_stream
 
 DOCS_STREAM_SCHEMA = StructType(
     [
@@ -67,15 +68,13 @@ def stream_ppl_state(
     docs_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 10,
+    max_files_per_trigger: int | None = None,
 ):
     """Maintain the per-language LM counts over an append-only document dir.
     Returns the StreamingQuery (availableNow trigger: drains the backlog,
     then stops — re-run on the same checkpoint for new files)."""
-    stream = (
-        spark.readStream.schema(DOCS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
+    stream = file_stream(
+        spark, "parquet", docs_dir, DOCS_STREAM_SCHEMA, max_files_per_trigger
     )
     sink = versioned_count_sink(
         state_dir, _LANG_COUNTS_SCHEMA, ["lang", "token"], lang_token_counts

@@ -7,7 +7,8 @@ failures to a dead-letter queue with a redrive cap
 translation:
 
   queue dir of JSON task files  →  file-stream source (maxFilesPerTrigger =
-  the backpressure knob)  →  foreachBatch:
+  the backpressure knob, TASK_FILES_PER_TRIGGER by default)  →
+  foreachBatch:
       1. msg-id dedup inside the batch (dropDuplicates) AND against the
          committed log (left-anti) — the J1/J3 idempotence pattern, which
          with checkpointing upgrades at-least-once file delivery to
@@ -30,12 +31,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from .monitor import as_copy_log
+from .source import file_stream
 
 TASK_SCHEMA = StructType(
     [
@@ -46,6 +49,17 @@ TASK_SCHEMA = StructType(
         StructField("dst_bucket", StringType()),
     ]
 )
+
+
+SENT_LOG_SCHEMA = "msg_id string"
+
+# The consumer's admission is a task count, not bytes: a micro-batch's cost
+# is its copies (external I/O per row), and copy_log and the sent-log are
+# written only when the batch ends, so its size is both the dashboard's lag
+# behind this consumer and the copies a crash re-runs. 10 task files of
+# TASK_BATCH_SIZE (100) tasks ≈ 1000 tasks, one receive of 10 SQS messages in
+# the reference. A byte limit would admit ~3.5M ~150 B tasks per 512 MiB wave.
+TASK_FILES_PER_TRIGGER = 10
 
 
 def msg_id(df: DataFrame) -> DataFrame:
@@ -66,15 +80,13 @@ def consume_task_queue(
     dead_letter_dir: str,
     sent_log_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 10,
+    max_files_per_trigger: int | None = TASK_FILES_PER_TRIGGER,
 ):
     """Start the streaming consumer; returns the StreamingQuery (availableNow
-    trigger — drains the queue then stops, ≙ one executor polling session)."""
-    stream = (
-        spark.readStream.schema(TASK_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(queue_dir)
-    )
+    trigger — drains the queue then stops, ≙ one executor polling session).
+    ``max_files_per_trigger=None`` opts into the byte-sized admission of
+    streaming/source.py."""
+    stream = file_stream(spark, "json", queue_dir, TASK_SCHEMA, max_files_per_trigger)
     fn = copy_fn
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -84,7 +96,9 @@ def consume_task_queue(
         # mirroring the "已经发送" check (inventory_lib.py:146-162).
         spark_l = batch.sparkSession
         try:
-            sent = spark_l.read.parquet(sent_log_dir).select("msg_id")
+            # fixed schema: no schema-inference job per batch, and an
+            # existing but still empty sent-log dir reads as no rows
+            sent = spark_l.read.schema(SENT_LOG_SCHEMA).parquet(sent_log_dir)
             batch = batch.join(F.broadcast(sent), "msg_id", "left_anti")
         except AnalysisException as e:
             # Only a missing sent-log (first batch ever) may skip the dedup
@@ -110,7 +124,7 @@ def consume_task_queue(
                 StructField("msg_id", StringType()),
                 StructField("object_key", StringType()),
                 StructField("replication_time_s", DoubleType()),
-                StructField("replication_status", IntegerType()),
+                StructField("replication_status", LongType()),
                 StructField("size", LongType()),
             ]
         )
@@ -121,9 +135,7 @@ def consume_task_queue(
             .drop("replication_time_s")
             .cache()
         )
-        results.select(
-            "object_key", "replication_time", "replication_status", "size"
-        ).write.mode("append").parquet(copy_log_dir)
+        as_copy_log(results).write.mode("append").parquet(copy_log_dir)
         failed = results.filter(F.col("replication_status") == 0)
         if failed.take(1):
             failed.write.mode("append").parquet(dead_letter_dir)

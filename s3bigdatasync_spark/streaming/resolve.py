@@ -45,6 +45,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from pyspark.sql.utils import AnalysisException
 
 from ..operators.resolve import match_names_segments
+from .source import file_stream
 
 DIRTY_STREAM_SCHEMA = StructType(
     [
@@ -207,15 +208,13 @@ def stream_resolve(
     catalog_df: DataFrame,
     log_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 10,
+    max_files_per_trigger: int | None = None,
 ):
     """Match arriving dirty records against `catalog_df` (a (p_partkey,
     p_name) relation) and append verdicts to the match log. availableNow
     trigger: drains the backlog, then stops."""
-    stream = (
-        spark.readStream.schema(DIRTY_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(dirty_dir)
+    stream = file_stream(
+        spark, "parquet", dirty_dir, DIRTY_STREAM_SCHEMA, max_files_per_trigger
     )
 
     # A pre-pair-identity log reads back with dirty_name=NULL; the

@@ -56,6 +56,7 @@ from pyspark.sql.utils import AnalysisException
 
 from ..operators.timeline import snapshot_history_merge
 from .localrel import local_rel
+from .source import file_stream
 
 SNAPSHOT_STREAM_SCHEMA = StructType(
     [
@@ -200,14 +201,15 @@ def stream_snapshot_history(
     snapshots_dir: str,
     runs_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 10,
+    max_files_per_trigger: int | None = 10,
 ):
     """Maintain the SCD2 run table over an append-only snapshot dir.
-    Returns the StreamingQuery (availableNow: drains, then stops)."""
-    stream = (
-        spark.readStream.schema(SNAPSHOT_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(snapshots_dir)
+    Returns the StreamingQuery (availableNow: drains, then stops).
+    Admission is a file count: each snapshot file is one version and the
+    sink folds a batch version by version, so its cost grows with the file
+    count, not with bytes (``None`` opts into streaming/source.py's bytes)."""
+    stream = file_stream(
+        spark, "parquet", snapshots_dir, SNAPSHOT_STREAM_SCHEMA, max_files_per_trigger
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:

@@ -61,6 +61,7 @@ from pyspark.sql import functions as F
 
 from .localrel import local_rel
 from .segments import read_segmented_counts, segmented_count_sink
+from .source import file_stream
 
 SNAPSHOT_STREAM_SCHEMA = (
     "key string, v int, etag string, size long"
@@ -254,15 +255,17 @@ def stream_snapshot_history_open(
     snapshots_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 10,
+    max_files_per_trigger: int | None = 10,
     **sink_opts,
 ):
     """Maintain the open-run event log over an append-only snapshot dir.
-    Returns the StreamingQuery (availableNow: drains, then stops)."""
-    stream = (
-        spark.readStream.schema(SNAPSHOT_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(snapshots_dir)
+    Returns the StreamingQuery (availableNow: drains, then stops).
+    Admission is a file count: each snapshot file is one version, and
+    _events_for_batch adds three union branches per version, each filtering
+    the whole batch, so a batch costs O(k²) in its k files whatever their
+    bytes (``None`` opts into streaming/source.py's bytes)."""
+    stream = file_stream(
+        spark, "parquet", snapshots_dir, SNAPSHOT_STREAM_SCHEMA, max_files_per_trigger
     )
     sink = segmented_count_sink(
         state_dir,

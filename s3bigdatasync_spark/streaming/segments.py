@@ -68,11 +68,15 @@ is now assembled from per-segment partials at read time.
 
 from __future__ import annotations
 
+import os
+import posixpath
 from collections.abc import Callable, Sequence
+from urllib.parse import urlparse
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dedup import checkpoint_metrics
 from .drift import _read_meta, _scan_latest_complete  # shared protocol core
 from .localrel import local_rel
 
@@ -83,10 +87,20 @@ _MANIFEST_SCHEMA = "seg string, tier int, n_rows long"
 _FILES_SCHEMA = "file_path string"
 _SEG_PREFIXES = ("manifest", "files")
 
-# state_dir -> the token of the writer allowed to flip it (see the
-# single-writer contract note inside segmented_count_sink). Keyed per
+# _writer_key(state_dir) -> the token of the writer allowed to flip it (see
+# the single-writer contract note inside segmented_count_sink). Keyed per
 # driver process; never cleaned up — a handful of object() sentinels.
 _ACTIVE_WRITERS: dict[str, object] = {}
+
+
+def _writer_key(state_dir: str) -> str:
+    """One key per directory, whatever its spelling: a trailing slash, a
+    relative path, a symlink or a file: URI must not give a second sink its
+    own token, or the single-writer guard would not fire."""
+    u = urlparse(state_dir)
+    if u.scheme in ("", "file"):
+        return os.path.realpath(u.path)
+    return f"{u.scheme}://{u.netloc}{posixpath.normpath(u.path or '/')}"
 
 
 def _key_names(counts_schema: str) -> list[str]:
@@ -108,12 +122,15 @@ def _manifest_at(
         .parquet(f"{state_dir}/manifest_v{last}")
         .collect()
     )
-    # sort on the name's (tier, name) encoding so a multi-file manifest can
-    # never flake the merge-group choice
-    return sorted(
-        ((r["seg"], r["tier"], r["n_rows"]) for r in rows),
-        key=lambda st: (st[1], st[0]),
-    )
+    return _sorted_manifest((r["seg"], r["tier"], r["n_rows"]) for r in rows)
+
+
+def _sorted_manifest(entries) -> list[tuple[str, int, int]]:
+    """Manifest entries in (tier, name) order — the order a read of the
+    committed manifest yields, so a multi-file manifest can never flake the
+    merge-group choice and a carried manifest picks the groups a re-read
+    would."""
+    return sorted(entries, key=lambda st: (st[1], st[0]))
 
 
 def _read_manifest(
@@ -126,10 +143,6 @@ def _files_at(spark: SparkSession, state_dir: str, last: int) -> DataFrame:
     if last < 0:
         return local_rel(spark, [], _FILES_SCHEMA)
     return spark.read.schema(_FILES_SCHEMA).parquet(f"{state_dir}/files_v{last}")
-
-
-def _read_files(spark: SparkSession, state_dir: str) -> DataFrame:
-    return _files_at(spark, state_dir, _read_meta(spark, state_dir, _SEG_PREFIXES))
 
 
 def _read_segment(
@@ -266,34 +279,34 @@ def segmented_count_sink(
                 "overwrite"
             ).parquet(f"{state_dir}/{name}")
 
-    # Last flipped version, carried across batches of one stream run: only
-    # this sink writes the state dir, so after the first batch the meta
-    # pointer is known without a read. A restart builds a fresh closure and
-    # re-reads; a replayed batch sees the same committed meta either way.
-    # (Round-11 overhead cut: the r10 sink re-read meta three times per
-    # batch — once here, once inside _read_files, once inside
-    # _read_manifest.)
+    # Last flipped version AND its manifest, carried across batches of one
+    # stream run: only this sink writes the state dir, so after the first
+    # batch both are known without a read. A restart builds a fresh closure
+    # and re-reads; a replayed batch sees the same committed meta either way.
+    # Each read skipped is a Spark job of pure fixed cost per micro-batch.
     #
-    # SINGLE-WRITER CONTRACT (r12, verdict item 9): the cached pointer is
-    # only sound if no other sink writes this state_dir concurrently — a
-    # second writer would flip meta underneath the cache and the stale
-    # sink's next batch would recompute the SAME next version and overwrite
-    # the newer writer's committed segments (segment names are derived from
-    # the version, so the clobber happens at the first segment write,
-    # before any flip-time check could catch it). Within one driver process
-    # that contract is ENFORCED: creating a new sink for a state_dir takes
-    # over the dir, and any older sink closure raises on its next batch
-    # instead of corrupting state. Across processes it is the deployment's
-    # lock to provide (one compactor per LSM state dir — the same rule
-    # every log-structured store documents); an external writer cannot be
-    # detected without re-reading meta before every write, which is exactly
-    # the per-batch overhead the r11 cut removed.
-    last_flipped: dict[str, int] = {}
+    # SINGLE-WRITER CONTRACT (r12, verdict item 9): the carried pointer and
+    # manifest are only sound if no other sink writes this state_dir
+    # concurrently — a second writer would flip meta underneath them and the
+    # stale sink's next batch would recompute the SAME next version from a
+    # stale manifest and overwrite the newer writer's committed segments
+    # (segment names are derived from the version, so the clobber happens at
+    # the first segment write, before any flip-time check could catch it).
+    # Within one driver process that contract is ENFORCED: creating a new
+    # sink for a state_dir (under any spelling of the path — _writer_key)
+    # takes over the dir, and any older sink closure raises on its next
+    # batch instead of corrupting state. Across processes it is the
+    # deployment's lock to provide (one compactor per LSM state dir — the
+    # same rule every log-structured store documents); an external writer
+    # cannot be detected without re-reading meta before every write, which
+    # is exactly the per-batch overhead the carried state removes.
+    carried: dict[str, object] = {}
     token = object()
-    _ACTIVE_WRITERS[state_dir] = token
+    writer_key = _writer_key(state_dir)
+    _ACTIVE_WRITERS[writer_key] = token
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if _ACTIVE_WRITERS.get(state_dir) is not token:
+        if _ACTIVE_WRITERS.get(writer_key) is not token:
             raise RuntimeError(
                 f"segmented_count_sink: a newer sink took over state_dir "
                 f"{state_dir!r} in this process — this writer's cached "
@@ -301,19 +314,32 @@ def segmented_count_sink(
                 "newer writer's committed segments (single-writer contract)"
             )
         sp = batch_df.sparkSession
-        if "v" not in last_flipped:
-            last_flipped["v"] = _read_meta(sp, state_dir, _SEG_PREFIXES)
-        last = last_flipped["v"]
+        if "v" not in carried:
+            carried["v"] = _read_meta(sp, state_dir, _SEG_PREFIXES)
+            carried["manifest"] = _manifest_at(sp, state_dir, carried["v"])
+        last = carried["v"]
         version = last + 1
+        manifest = list(carried["manifest"])
         applied = _files_at(sp, state_dir, last)
         tagged = batch_df.withColumn("file_path", F.input_file_name())
         fresh = tagged.join(applied, "file_path", "left_anti")
-        manifest = list(_manifest_at(sp, state_dir, last))
+        # The fresh counts are computed ONCE: one eager checkpoint job
+        # materializes them and, through the Observation, counts them — the
+        # count doubles as the emptiness check and the layout/manifest size
+        # record — and the segment write reads the checkpoint instead of
+        # re-running the scan, anti-join and aggregation. Under AQE a cache()
+        # plus count() costs two more jobs per batch (a job to fill the
+        # cache, and the count's own shuffle stage). The checkpoint's blocks
+        # are released by the context cleaner once the DataFrame is dropped.
+        obs = Observation()
+        fresh_counts = (
+            count_fn(fresh)
+            .withColumn("bucket", bucket_col())
+            .observe(obs, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
+        )
+        n0 = checkpoint_metrics(obs, "segmented_count_sink")["n"]
         seq = 0
-        fresh_counts = count_fn(fresh).withColumn("bucket", bucket_col())
-        # one aggregation-sized action: the count doubles as the emptiness
-        # check and the layout/manifest size record
-        n0 = fresh_counts.count()
         if n0:
             seg0 = f"seg_v{version}_t0_{seq}"
             seq += 1
@@ -321,7 +347,7 @@ def segmented_count_sink(
             manifest.append((seg0, 0, n0))
         # tiered compaction: whenever a tier holds merge_fanout segments,
         # fold merge_fanout of them one tier up. Deterministic given the
-        # manifest (sorted read + stable append order), so a crash-replayed
+        # manifest (sorted + stable append order), so a crash-replayed
         # batch rebuilds byte-identical segment names.
         while True:
             by_tier: dict[int, list[tuple[str, int]]] = {}
@@ -358,7 +384,10 @@ def segmented_count_sink(
             write_segment(merged, name, n_est)
             manifest = [e for e in manifest if e[0] not in group_names]
             manifest.append((name, tier + 1, n_est))
-        files = applied.unionByName(fresh.select("file_path").distinct()).distinct()
+        # applied ∪ this batch's files: the same set as applied ∪ the fresh
+        # rows' files, and it needs only the file names — for a parquet
+        # batch a footer-only re-scan, not the anti-join
+        files = applied.unionByName(tagged.select("file_path")).distinct()
         files.write.mode("overwrite").parquet(f"{state_dir}/files_v{version}")
         # manifest + meta ride local_rel, not createDataFrame: a Python-RDD-
         # backed 4-row write costs ~4.4 s per micro-batch (the dominant term
@@ -369,7 +398,8 @@ def segmented_count_sink(
         local_rel(sp, [(version,)], "version long").write.mode(
             "overwrite"
         ).parquet(f"{state_dir}/meta")
-        last_flipped["v"] = version
+        carried["v"] = version
+        carried["manifest"] = _sorted_manifest(manifest)
         _gc(state_dir, version, keep_segs={s for s, _t, _n in manifest})
 
     return sink

@@ -21,6 +21,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .source import file_stream
+
 SESSION_GAP_SECONDS = 1800
 
 EVENT_SCHEMA = StructType(
@@ -120,10 +122,8 @@ def stream_sessionize(
                 }
             )
 
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(events_dir)
+    stream = file_stream(
+        spark, "parquet", events_dir, EVENT_SCHEMA, max_files_per_trigger
     )
     sessions = (
         stream.withWatermark("ts", "1 hour")

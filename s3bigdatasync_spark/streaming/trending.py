@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .source import file_stream
+
 EVENTS_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -61,14 +63,12 @@ def stream_trending_types(
     checkpoint_dir: str,
     window_minutes: int = 5,
     k: int = 3,
-    max_files_per_trigger: int = 10,
+    max_files_per_trigger: int | None = None,
 ):
     """Start the trending query; returns the StreamingQuery (availableNow —
     drains the backlog and stops, restart-safe via the checkpoint)."""
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(events_dir)
+    stream = file_stream(
+        spark, "parquet", events_dir, EVENTS_SCHEMA, max_files_per_trigger
     )
     counts = (
         stream.withWatermark("ts", WATERMARK_DELAY)
